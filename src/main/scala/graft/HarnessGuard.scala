@@ -16,7 +16,9 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, 
   *
   * The job group is set inside the worker thread (job groups are
   * thread-local), so only the guarded body's jobs are cancelled; the
-  * harness's own bookkeeping jobs are unaffected.
+  * harness's own bookkeeping jobs are unaffected. Jobs the body overlaps
+  * run through [[Overlap.all]], whose branch threads are created inside
+  * the body and so inherit its group: they are cancelled with it too.
   */
 object HarnessGuard {
   /** Run `body` with a wall-clock bound. Returns Right(result) or
@@ -44,8 +46,9 @@ object HarnessGuard {
         // already submitted — a body wedged in driver-side work between
         // jobs would submit its NEXT job after the cancel and run it to
         // completion on our task slots. Spark 4's and-future-jobs variant
-        // keeps the group cancelled; group names are per-query-unique, so
-        // the stickiness can never hit a later query.
+        // keeps the group cancelled; group names are per-query-unique and
+        // only this query's threads carry it (Overlap.all creates its
+        // threads per call), so the stickiness can never hit a later query.
         sc.cancelJobGroupAndFutureJobs(group)
         // give the cancel a grace window to unwind cleanly
         try fut.get(10, TimeUnit.SECONDS)

@@ -540,7 +540,8 @@ object Multimodal {
     * `graft.phash64.uf.cap` system property so specs can force the
     * distributed fixpoint tier on small fixtures. */
   private def driverEdgeCap: Long =
-    sys.props.get("graft.phash64.uf.cap").map(_.toLong).getOrElse(1L << 16)
+    sys.props.get("graft.phash64.uf.cap")
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(1L << 16)
 
   /** Min-root union-find over an edge list: returns node → component
     * label where the label is the component's smallest member (merging

@@ -1464,7 +1464,7 @@ object Dedup {
   private def prefilterMinReps: Long =
     sys.props.get("graft.lsh.prefilter.minreps")
       .orElse(sys.env.get("GRAFT_LSH_PREFILTER_MINREPS"))
-      .map(_.toLong).getOrElse(1L << 16)
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(1L << 16)
 
   /** Distinct-signature count of a persisted index — a parquet
     * metadata-only count, memoized per index tree (the probe runs once

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QuerySpec, Tables => T, TmpDirs}
+import graft.{Overlap, QuerySpec, Tables => T, TmpDirs}
 import graft.functions.CosineSim
 import graft.functions.CosineSim.cosine_sim
 
@@ -266,22 +266,16 @@ object Similarity {
     // contracts joined each query against the pair table, blowing the
     // 150 s warmup budget (5 phases skipped, 5 first-use suspects in
     // BENCH); concurrent, the phase is bounded by the slowest fit.
-    // Pool threads are created inside the phase, so HarnessGuard's
-    // job-group tag inherits (SparkContext localProperties are
-    // InheritableThreadLocal) and a phase CUT still cancels these jobs.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val fits: Seq[() => Long] = Seq(
+    // Barrier: the branches share only the pair table counted above; each
+    // fills its own model cache and cached corpus frame. knnIvf and
+    // knnIvfPq both reach the coarse quantizer, whose fit ModelStore
+    // serializes per key (the second branch loads the first's model).
+    Overlap.all(s)(Seq(
       () => knnIvf(s, d).count(),
       () => knnPq(s, d).count(), // PQ codebook fit — fit-once/probe-many
       () => knnIvfPq(s, d).count(), // residual-PQ codebook fit
       () => topicClusters(s, d).count(), // topic-model fit
-      () => knnPca(s, d).count()) // PCA fit
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(fits.map(f => scala.concurrent.Future(f()))),
-      scala.concurrent.duration.Duration(600, "s"))
-    finally pool.shutdown()
+      () => knnPca(s, d).count())) // PCA fit
     // after the fits: rides the now-cached ivf model + pair table, but
     // has its own recall-join first-use (flagged suspect in-bench when
     // unwarmed); running it concurrently with knnIvf would instead race
@@ -489,78 +483,52 @@ object Similarity {
   private val IVF_RECALL_FLOOR = 0.3
   private val ANN_RECALL_FLOOR = 0.7
 
+  /** Shared recall scaffold for every *_contract query: the
+    * oracle-compatible query count, and the pooled recall of each approx
+    * (query_id, cand_id) frame against the exact top-K (1.0 on an empty
+    * baseline). ONE definition of "recall" for all five contracts, so a
+    * future change (e.g. per-query averaging) cannot be applied to some
+    * and not others (r10 review finding: five copies). nQueries is
+    * derived exactly as the oracle derives it (embeddings with
+    * vec_id < NQ), NOT as distinct query ids in the brute-force output —
+    * on a degenerate corpus the two diverge.
+    *
+    * The two scaffold counts (exact-pair baseline, query count) and every
+    * recall join are independent jobs: one [[Overlap.all]] runs them
+    * together, wall ≈ the slowest recall chain instead of the sum (r21,
+    * guide §2.6). Each approx frame is built inside its own branch, so
+    * its model fits overlap too. Barrier: the branches share only the
+    * fit-once file-backed pair table, written before the fan-out by
+    * [[exactKnnPairs]]; everything else a branch reads it builds itself. */
+  private def recallScaffold(s: SparkSession, d: String)(
+      approxes: (() => DataFrame)*): (Long, Seq[Double]) = {
+    val exact = exactKnnPairs(s, d)
+    def hits(approx: DataFrame) =
+      exact.join(approx.select(col("query_id"), col("cand_id")),
+        Seq("query_id", "cand_id"), "left_semi").count()
+    val counts = Overlap.all(s)(
+      Seq(() => exact.count(),
+        () => T.embeddings(s, d).filter(col("vec_id") < NQ).count()) ++
+        approxes.map(approx => () => hits(approx())))
+    val base = counts.head
+    (counts(1), counts.drop(2).map(h => if (base == 0) 1.0 else h.toDouble / base))
+  }
+
   /** ANN quality contract, oracle-checkable (the sketch_hll_contract
     * pattern): the recall *values* are model-internal (kmeans cells, BRP
     * hash buckets), but "recall@K against the exact brute-force top-K
     * clears the pinned floor" is a deterministic boolean for the fixed
     * seeds and dataset — so the driver hard-gates both approximate ANN
     * paths instead of relying on ScalaTest alone. */
-  /** Shared recall scaffold for every *_contract query: exact-pair
-    * baseline count, the oracle-compatible query count, and pooled
-    * recall of an approx (query_id, cand_id) frame against the exact
-    * top-K (1.0 on an empty baseline). ONE definition of "recall" for
-    * all five contracts, so a future change (e.g. per-query averaging)
-    * cannot be applied to some and not others (r10 review finding:
-    * five copies). nQueries is derived exactly as the oracle derives it
-    * (embeddings with vec_id < NQ), NOT as distinct query ids in the
-    * brute-force output — on a degenerate corpus the two diverge. */
-  private def recallScaffold(s: SparkSession, d: String)
-      : (() => Long, DataFrame => Double) = {
-    // the baseline is the fit-once file-backed pair table — no persist
-    // (and nothing to unpersist): each consumer re-reads a tiny parquet
-    val exact = exactKnnPairs(s, d)
-    // r21 (guide §2.6): the two scaffold counts (exact-pair baseline,
-    // oracle-convention query count) are tiny independent jobs that every
-    // contract used to pay SEQUENTIALLY before its heavy recall chain.
-    // Launch them on driver threads at scaffold time; the caller's
-    // recall join then runs concurrently and the awaits land after it —
-    // wall ≈ max(recall chain, counts) instead of the sum. Sequential
-    // path via -Dgraft.scaffold.seq=1 for the A/B. Semantics unchanged:
-    // on an empty baseline the semi-join count is 0 over an empty frame
-    // (one trivial extra job) and recall stays 1.0.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val seq = sys.props.get("graft.scaffold.seq").contains("1")
-    def nqJob() = T.embeddings(s, d).filter(col("vec_id") < NQ).count()
-    val (baseF, nqF) =
-      if (seq) (Future.successful(exact.count()), Future.successful(nqJob()))
-      else (Future(exact.count()), Future(nqJob()))
-    val recallOf = (approx: DataFrame) => {
-      val hit = exact.join(approx.select(col("query_id"), col("cand_id")),
-        Seq("query_id", "cand_id"), "left_semi").count().toDouble
-      val base = Await.result(baseF, Duration.Inf)
-      if (base == 0) 1.0 else hit / base
-    }
-    (() => Await.result(nqF, Duration.Inf), recallOf)
-  }
-
   private def annContract(s: SparkSession, d: String): DataFrame = {
-    val (nQueriesOf, recallOf) = recallScaffold(s, d)
-    // r21 (guide §2.6, verdict #5): the two recall measurements are
-    // INDEPENDENT job chains over disjoint pipelines (IVF probe vs BRP
-    // join) that were run back-to-back, each leaving the box idle
-    // through the other's stage tails. Submit them from two driver
-    // threads so the scheduler backfills — results are the same two
-    // scalars; wall drops from sum toward max. Builders run inside the
-    // futures too (both are thread-confined constructions; the shared
-    // fit-once models are already materialized by recallScaffold /
-    // ModelStore). Legacy sequential path: -Dgraft.anncontract.seq=1.
-    val (ivfRec, annRec) =
-      if (sys.props.get("graft.anncontract.seq").contains("1")) {
-        (recallOf(knnIvf(s, d)),
-          recallOf(MllibOps.annMllib(s, d).select(col("query_id"), col("cand_id"))))
-      } else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val ivfF = Future(recallOf(knnIvf(s, d)))
-        val annF = Future(recallOf(
-          MllibOps.annMllib(s, d).select(col("query_id"), col("cand_id"))))
-        (Await.result(ivfF, Duration.Inf), Await.result(annF, Duration.Inf))
-      }
+    // the two recall measurements are INDEPENDENT job chains over
+    // disjoint pipelines (IVF probe vs BRP join); in one scaffold call
+    // they overlap with each other and with the scaffold counts (r21,
+    // verdict #5)
+    val (nQueries, Seq(ivfRec, annRec)) = recallScaffold(s, d)(
+      () => knnIvf(s, d), () => MllibOps.annMllib(s, d))
     import s.implicits._
-    Seq((nQueriesOf(), ivfRec >= IVF_RECALL_FLOOR, annRec >= ANN_RECALL_FLOOR))
+    Seq((nQueries, ivfRec >= IVF_RECALL_FLOOR, annRec >= ANN_RECALL_FLOOR))
       .toDF("n_queries", "ivf_recall_ok", "ann_recall_ok")
   }
 
@@ -577,10 +545,9 @@ object Similarity {
     * top-K: seeds are pinned, so the floor crossing is deterministic per
     * dataset and the driver hash-gates the boolean. */
   private def mllibAnnContract(s: SparkSession, d: String): DataFrame = {
-    val (nQueriesOf, recallOf) = recallScaffold(s, d)
-    val recall = recallOf(MllibOps.annMllib(s, d))
+    val (nQueries, Seq(recall)) = recallScaffold(s, d)(() => MllibOps.annMllib(s, d))
     import s.implicits._
-    Seq((nQueriesOf(), recall >= ANN_RECALL_FLOOR))
+    Seq((nQueries, recall >= ANN_RECALL_FLOOR))
       .toDF("n_queries", "mllib_recall_ok")
   }
 
@@ -683,10 +650,9 @@ object Similarity {
     * brute-force top-K crosses the pinned floor. Seeds are fixed, so the
     * boolean is deterministic per dataset and the driver hash-gates it. */
   private def pqContract(s: SparkSession, d: String): DataFrame = {
-    val (nQueriesOf, recallOf) = recallScaffold(s, d)
-    val recall = recallOf(knnPq(s, d))
+    val (nQueries, Seq(recall)) = recallScaffold(s, d)(() => knnPq(s, d))
     import s.implicits._
-    Seq((nQueriesOf(), recall >= PQ_RECALL_FLOOR))
+    Seq((nQueries, recall >= PQ_RECALL_FLOOR))
       .toDF("n_queries", "pq_recall_ok")
   }
 
@@ -809,10 +775,9 @@ object Similarity {
     * brute-force top-K crosses the pinned floor; seeds fixed, boolean
     * deterministic per dataset, driver-hash-gated. */
   private def ivfpqContract(s: SparkSession, d: String): DataFrame = {
-    val (nQueriesOf, recallOf) = recallScaffold(s, d)
-    val recall = recallOf(knnIvfPq(s, d))
+    val (nQueries, Seq(recall)) = recallScaffold(s, d)(() => knnIvfPq(s, d))
     import s.implicits._
-    Seq((nQueriesOf(), recall >= IVFPQ_RECALL_FLOOR))
+    Seq((nQueries, recall >= IVFPQ_RECALL_FLOOR))
       .toDF("n_queries", "ivfpq_recall_ok")
   }
 
@@ -899,11 +864,9 @@ object Similarity {
     * no random init). */
   private def pcaContract(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (nQueriesOf, recallOf) = recallScaffold(s, d)
-    val recall = recallOf(knnPca(s, d))
+    val (nQueries, Seq(recall)) = recallScaffold(s, d)(() => knnPca(s, d))
     // Fit via pcaProject (cache-aware): with an empty corpus the recall
     // join ran over empty frames, so the model may not have been fit yet.
-    val nQueries = nQueriesOf()
     val cumVar =
       if (nQueries == 0) 1.0
       else pcaProject(s, d)
@@ -996,15 +959,11 @@ object Similarity {
         .toDF("n_vectors", "coverage_ok", "gain_ok", "purity_ok")
     val asg = asgOpt.get.persist()
     val n = asg.count()
-    // r21 (guide §2.6): after the persist barrier, the three audit
-    // chains — coverage (distinct clusters), variance (mean → wcss/tss),
-    // purity — are independent reads of the cached frame. Submit them
-    // from driver threads; the box runs them concurrently instead of
-    // back-to-back. Sequential path via -Dgraft.scaffold.seq=1 (shared
-    // with recallScaffold — one knob for the contract-overlap family).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // r21 (guide §2.6): the three audit chains — coverage (distinct
+    // clusters), variance (mean → wcss/tss), purity — are independent
+    // reads of the cached frame, run together by one Overlap.all.
+    // Barrier: `asg` is materialized by the count above; the model they
+    // read was fit by topicAssign.
     def coverageJob() = asg.select(col("cluster_id")).distinct().count()
     def varianceJob(): (Double, Double) = {
       // global mean of the normalized vectors (dim doubles — driver-tiny)
@@ -1034,14 +993,7 @@ object Similarity {
       .groupBy(col("cluster_id")).agg(max(col("cnt")).as("top"))
       .agg(sum(col("top"))).first().getLong(0).toDouble / n
     val (nClusters, (wcss, tss), purity) =
-      if (sys.props.get("graft.scaffold.seq").contains("1"))
-        (coverageJob(), varianceJob(), purityJob())
-      else {
-        val cF = Future(coverageJob()); val vF = Future(varianceJob())
-        val pF = Future(purityJob())
-        (Await.result(cF, Duration.Inf), Await.result(vF, Duration.Inf),
-          Await.result(pF, Duration.Inf))
-      }
+      Overlap.all(s, coverageJob(), varianceJob(), purityJob())
     asg.unpersist() // every dependent aggregate is materialized above
     Seq((n, nClusters == TK.toLong, wcss / tss <= TOPIC_WCSS_CEIL,
       purity >= TOPIC_PURITY_FLOOR))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables => T}
+import graft.{Overlap, QuerySpec, Tables => T}
 import graft.functions.Text
 
 /** Sketch-based approximate analytics — the Spark twins of the reference's
@@ -277,7 +277,24 @@ object Sketches {
     * the data below, so the design fpp applies at every scale factor).
     * Ground-truth membership is an exact distinct/anti-join both engines
     * compute; the oracle asserts the exact counts plus both booleans. */
-  private def bloomContract(s: SparkSession, d: String): DataFrame = {
+  private def bloomContract(s: SparkSession, d: String): DataFrame =
+    bloomContractOf(s, d) { (inserted, nIns) =>
+      // size to the data (≥ the reference's 100k default) so the 1% design
+      // fpp holds at any scale factor, not just when n ≤ 100k
+      val bloom = if (nIns == 0) null
+        else inserted.stat.bloomFilter("sh", math.max(100000L, nIns), 0.01)
+      graft.functions.SketchProbes.bloomMightContain(s, bloom, col("sh"))
+    }
+
+  /** Shared body of both bloom contracts. `probeOf(inserted, nIns)` builds
+    * the filter from the persisted DISTINCT inserted keys and returns its
+    * membership probe of column `sh`. Building from the distinct set, not
+    * a second corpus-scale pass over the raw shingle stream, is
+    * bit-identical (inserting a key twice sets the same bits) and scans
+    * |distinct| cached rows instead of replaying the explode (r20, guide
+    * §1.2/§2.3). */
+  private def bloomContractOf(s: SparkSession, d: String)(
+      probeOf: (DataFrame, Long) => Column): DataFrame = {
     val sh = T.documents(s, d)
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(Text.shingles3(col("toks"))).as("sh"))
@@ -285,55 +302,23 @@ object Sketches {
     val half = T.documents(s, d).count() / 2
     val inserted = sh.filter(col("doc_id") < half).select(col("sh")).distinct().persist()
     val nIns = inserted.count()
-    // size to the data (≥ the reference's 100k default) so the 1% design
-    // fpp holds at any scale factor, not just when n ≤ 100k.
-    // Build from the persisted DISTINCT key set, not a second corpus-scale
-    // pass over the raw shingle stream: inserting a key twice sets the
-    // same bits, so the filter over distinct keys is bit-identical while
-    // the build scans |distinct| rows from cache instead of replaying the
-    // explode (r20, guide §1.2/§2.3 — decide/build on the small frame).
-    val bloom = if (nIns == 0) null
-      else inserted.stat.bloomFilter("sh", math.max(100000L, nIns), 0.01)
-    def seen = graft.functions.SketchProbes.bloomMightContain(s, bloom, col("sh"))
-    // one aggregate pass computes (n_new, n_false_pos) together — the two
-    // sequential count jobs each replayed the distinct + anti-join of the
-    // never-inserted set (r20; the frame has exactly one consumer now, so
-    // the persist is gone too). Legacy two-pass shape reachable for the
-    // same-JVM A/B via -Dgraft.bloom.contract=legacy.
+    val seen = probeOf(inserted, nIns)
     val fresh = sh.filter(col("doc_id") >= half).select(col("sh")).distinct()
       .join(inserted, Seq("sh"), "left_anti")
-    // r21 (guide §2.6, the annContract pattern): after the filter is
-    // built, the false-negative probe and the never-inserted aggregate
-    // are INDEPENDENT job chains over already-cached frames — submit
-    // them from two driver threads so the second fills the first's
-    // stage tail instead of waiting for it. Sequential path (same fused
-    // aggregate) via -Dgraft.bloom.overlap=0 for the A/B.
-    def missedJob() = inserted.filter(!seen).count()
-    def freshJob() =
-      if (sys.props.get("graft.bloom.contract").contains("legacy")) {
-        val f = fresh.persist(); val n = f.count(); val fp = f.filter(seen).count()
-        f.unpersist(); (n, fp)
-      } else {
+    // the false-negative probe and the never-inserted aggregate — (n_new,
+    // n_false_pos) in ONE pass (r20) — are independent job chains, run
+    // together so the second fills the first's stage tail (r21, guide
+    // §2.6). Barrier: `inserted` is persisted and counted above, and that
+    // count filled `sh`'s cache too; `fresh` is built in its own branch.
+    val (nMissed, (nNew, nFalsePos)) = Overlap.all(s,
+      inserted.filter(!seen).count(), {
         val r = fresh.agg(count(lit(1)), count(when(seen, lit(1)))).head
         (r.getLong(0), r.getLong(1))
-      }
-    val (nMissed, (nNew, nFalsePos)) =
-      if (sys.props.get("graft.bloom.overlap").contains("0") ||
-          sys.props.get("graft.bloom.contract").contains("legacy")) {
-        (missedJob(), freshJob())
-      } else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val mF = Future(missedJob())
-        val fF = Future(freshJob())
-        (Await.result(mF, Duration.Inf), Await.result(fF, Duration.Inf))
-      }
+      })
     val fpOk = nNew == 0 || nFalsePos.toDouble / nNew <= 0.05
     // every dependent count is materialized above and the result is a
-    // driver-local literal — drop the cached frames now (same hygiene as
-    // bloomFaithfulContract; direct callers outside the harnesses' per-
-    // query clearCache would otherwise accumulate them, review finding)
+    // driver-local literal — drop the cached frames now, so direct callers
+    // outside the harnesses' per-query clearCache don't accumulate them
     sh.unpersist(); inserted.unpersist()
     import s.implicits._
     Seq((nIns, nMissed == 0L, nNew, fpOk))
@@ -655,61 +640,18 @@ object Sketches {
     * negatives on inserted keys, realized fp rate on never-inserted keys
     * within 5× the 1% design. The aggregator's empty zero is a valid
     * all-bits-clear filter, so the empty-history path needs no null. */
-  private def bloomFaithfulContract(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val sh = T.documents(s, d)
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(Text.shingles3(col("toks"))).as("sh"))
-      .persist()
-    val half = T.documents(s, d).count() / 2
-    val inserted = sh.filter(col("doc_id") < half).select(col("sh")).distinct().persist()
-    val nIns = inserted.count()
-    // build from the persisted DISTINCT key set (bit-identical: RefBloom
-    // insert only ORs bits, and mightContain reads bits/m/k only — the
-    // build-side `inserted` counter never reaches the output) instead of
-    // replaying the corpus-scale explode a second time (r20, guide §2.3)
-    val bloom = inserted.select(col("sh")).as[String]
-      .select(graft.functions.RefSketches
-        .bloomAgg(math.max(100000L, nIns), 0.01).toColumn).head()
-    // corpus-sized probe scans through the codegen'd native expression —
-    // same RefBloom.mightContain bits, no UDF boxing (r10 verdict #3)
-    def seen = graft.functions.SketchProbes.refBloomMightContain(s, bloom, col("sh"))
-    // one fused (count, false-positive count) pass over the never-inserted
-    // set — same rewrite as bloomContract; A/B via -Dgraft.bloom.contract.
-    // r21: the probe and the aggregate overlap from two driver threads
-    // (guide §2.6 — see bloomContract); -Dgraft.bloom.overlap=0 = sequential.
-    val fresh = sh.filter(col("doc_id") >= half).select(col("sh")).distinct()
-      .join(inserted, Seq("sh"), "left_anti")
-    def missedJob() = inserted.filter(!seen).count()
-    def freshJob() =
-      if (sys.props.get("graft.bloom.contract").contains("legacy")) {
-        val f = fresh.persist(); val n = f.count(); val fp = f.filter(seen).count()
-        f.unpersist(); (n, fp)
-      } else {
-        val r = fresh.agg(count(lit(1)), count(when(seen, lit(1)))).head
-        (r.getLong(0), r.getLong(1))
-      }
-    val (nMissed, (nNew, nFalsePos)) =
-      if (sys.props.get("graft.bloom.overlap").contains("0") ||
-          sys.props.get("graft.bloom.contract").contains("legacy")) {
-        (missedJob(), freshJob())
-      } else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val mF = Future(missedJob())
-        val fF = Future(freshJob())
-        (Await.result(mF, Duration.Inf), Await.result(fF, Duration.Inf))
-      }
-    val fpOk = nNew == 0 || nFalsePos.toDouble / nNew <= 0.05
-    // every dependent count is materialized above and the returned frame is
-    // a driver-local literal — unpersist here so direct callers (outside the
-    // bench's per-query clearCache) don't leak the cached frames
-    sh.unpersist()
-    inserted.unpersist()
-    Seq((nIns, nMissed == 0L, nNew, fpOk))
-      .toDF("n_inserted", "zero_false_negatives", "n_new", "fp_rate_ok")
-  }
+  private def bloomFaithfulContract(s: SparkSession, d: String): DataFrame =
+    bloomContractOf(s, d) { (inserted, nIns) =>
+      // RefBloom insert only ORs bits, and mightContain reads bits/m/k
+      // only — the build-side `inserted` counter never reaches the output
+      import s.implicits._
+      val bloom = inserted.select(col("sh")).as[String]
+        .select(graft.functions.RefSketches
+          .bloomAgg(math.max(100000L, nIns), 0.01).toColumn).head()
+      // corpus-sized probe scans through the codegen'd native expression —
+      // same RefBloom.mightContain bits, no UDF boxing (r10 verdict #3)
+      graft.functions.SketchProbes.refBloomMightContain(s, bloom, col("sh"))
+    }
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("sketch_cms_token_freq", cmsTokenFreq, Some(cmsTokenFreqSql)),

@@ -1,16 +1,19 @@
 package graft
 
 /** The approximate-family contract queries (sketch_*_contract,
-  * stream_dgim_contract, sim_ann_contract, mm_decode_integrity) hard-gate
-  * their sketches through the driver's DuckDB oracle at sf0.01; this spec
-  * pins the same all-booleans-true invariant at sf0.001 so a contract
-  * break is caught by `sbt test` before a driver round. */
+  * stream_dgim_contract, the sim_* / mllib ANN contracts,
+  * mm_decode_integrity) hard-gate their sketches through the driver's
+  * DuckDB oracle at sf0.01; this spec pins the same all-booleans-true
+  * invariant at sf0.001 so a contract break is caught by `sbt test`
+  * before a driver round. */
 class ContractSpec extends SparkSpec {
 
   private val contracts = Seq(
     "sketch_cms_contract", "sketch_bloom_contract", "sketch_hll_contract",
     "sketch_quantile_contract", "stream_dgim_contract", "sim_ann_contract",
-    "mm_decode_integrity", "sketch_bloom_stats_contract")
+    "mm_decode_integrity", "sketch_bloom_stats_contract",
+    "sketch_bloom_faithful_contract", "mllib_ann_contract", "sim_pq_contract",
+    "sim_ivfpq_contract", "sim_pca_contract", "sim_topic_contract")
 
   // rel_zorder_contract needs sf0.01: at sf0.001 l_suppkey spans only
   // 1..10, so sy carries no bits above the probe range and the z-value

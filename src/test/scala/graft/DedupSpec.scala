@@ -475,6 +475,29 @@ class DedupSpec extends SparkSpec {
     assert(singlePhase.nonEmpty, "fixture must produce at least one link")
   }
 
+  test("malformed numeric knobs fall back to their defaults") {
+    // a knob value that does not parse must act as if unset, never crash
+    // the query: each query's rows under "abc" equal its default rows
+    import spark.implicits._
+    def rows(q: String, dir: String) =
+      SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+    // the phash64 cap is read only when there are edges: one near pair
+    // (Hamming distance 1, the MultimodalSpec tier fixture) makes one
+    val dir = TmpDirs.create("graft_knob_fallback")
+    Seq((1L, ("a" * 32) + ("b" * 32)), (2L, ("a" * 31) + "b" + ("b" * 32)),
+        (9L, "q" * 96))
+      .toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(dir.resolve("documents.parquet").toString)
+    for ((knob, q, d) <- Seq(
+        ("graft.phash64.uf.cap", "mm_phash64_cluster", dir.toString),
+        ("graft.lsh.prefilter.minreps", "dedup_incremental", sf001))) {
+      val default = rows(q, d)
+      sys.props(knob) = "abc"
+      val malformed = try rows(q, d) finally sys.props.remove(knob)
+      assert(default.nonEmpty && malformed == default, s"$knob=abc changed $q")
+    }
+  }
+
   test("ngram jaccard: duplication-gated dictionary tier ≡ direct path") {
     // r18: identical texts have identical shingle sets, so past the
     // measured gate the capped universe / sizes / pair stats compute at

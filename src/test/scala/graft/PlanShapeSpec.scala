@@ -208,20 +208,29 @@ class PlanShapeSpec extends SparkSpec {
     } finally sys.props.remove("graft.pmi.dict.minfactor")
   }
 
-  test("bloom contracts: fused never-inserted aggregate matches the legacy two-pass counts") {
-    // r20: (n_new, n_false_pos) come from ONE aggregate over the
-    // anti-joined never-inserted set instead of two sequential count jobs
-    // (and the build scans the persisted DISTINCT key set, which is
-    // bit-identical — inserting a key twice ORs the same bits). Pin the
-    // full contract row against the legacy shape for both filters.
+  test("bloom contracts: counts match a driver-side shingle-set reference") {
+    // (n_new, n_false_pos) come from ONE aggregate over the anti-joined
+    // never-inserted set and the filter is built from the persisted
+    // DISTINCT key set (r20). Pin both contracts' counts against the set
+    // algebra redone on the driver from the collected per-doc shingles:
+    // n_inserted = |distinct inserted|, n_new = |fresh \ inserted|.
+    import org.apache.spark.sql.functions.col
+    import graft.functions.Text
+    val docs = graft.Tables.documents(spark, sf001)
+    val half = docs.count() / 2
+    val perDoc = docs
+      .select(col("doc_id"), Text.shingles3(Text.tokens(col("text"))).as("sh"))
+      .collect()
+      .map(r => (r.getLong(0), Option(r.getSeq[String](1)).getOrElse(Nil)))
+    val inserted = perDoc.filter(_._1 < half).flatMap(_._2).toSet
+    val fresh = perDoc.filter(_._1 >= half).flatMap(_._2).toSet -- inserted
+    assert(inserted.nonEmpty && fresh.nonEmpty, "fixture must split both ways")
     for (q <- Seq("sketch_bloom_contract", "sketch_bloom_faithful_contract")) {
-      val fused = SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq)
-      sys.props("graft.bloom.contract") = "legacy"
-      try {
-        val legacy = SparkEntry.queries(q)(spark, sf001).collect().map(_.toSeq)
-        assert(fused.toSeq == legacy.toSeq,
-          s"$q: fused contract row diverged: fused=${fused.toSeq} legacy=${legacy.toSeq}")
-      } finally sys.props.remove("graft.bloom.contract")
+      val r = SparkEntry.queries(q)(spark, sf001).collect().head
+      assert(r.getAs[Long]("n_inserted") == inserted.size,
+        s"$q: n_inserted ${r.getAs[Long]("n_inserted")} vs reference ${inserted.size}")
+      assert(r.getAs[Long]("n_new") == fresh.size,
+        s"$q: n_new ${r.getAs[Long]("n_new")} vs reference ${fresh.size}")
     }
   }
 
